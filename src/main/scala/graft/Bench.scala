@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -50,344 +49,19 @@ object Bench {
     "b2_partition_pruning"  -> "LayoutQueries.partitionedTables",
     "b3_time_partition_pruning" -> "LayoutQueries.timePartTables")
 
-  /** Accumulates per-stage shuffle/spill bytes between [[mark]]s — the
-    * evidence behind the scale claims: a query whose time looks fine but
-    * whose shuffle grows with the corpus is the one that dies at 100 TB,
-    * and this column makes that visible per round.
-    */
-  private final class ExchangeMeter extends SparkListener {
-    private val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    private val spilled = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spilled.addAndGet(m.diskBytesSpilled)
-        ()
-      }
-    }
-    def mark(): (Long, Long) =
-      (shuffleW.getAndSet(0L), spilled.getAndSet(0L))
-  }
-
-  /** Accumulates StreamingQueryProgress phase durations between [[mark]]s —
-    * the r12 lesson: `st2_stream_join` stalled 12× over its floor in the
-    * driver bench (min 2.30 s, median 15.62 s, max 28.42 s) and singlehandedly
-    * set the suite headline, and NOTHING in the artifact named where the
-    * stall sat (trigger machinery? state-store maintenance? source I/O?).
-    * Adjudicating it took cross-run forensics. This meter sums
-    * `progress.durationMs` per phase (addBatch, walCommit, getBatch,
-    * queryPlanning, commitOffsets, latestOffset, triggerExecution) plus the
-    * state-operator times (commit/updates/removals) across each timed pass,
-    * so a stalled pass carries its own attribution into the artifact: a
-    * pass whose wall time dwarfs its summed triggerExecution stalled
-    * OUTSIDE the triggers (startup/stop/fixture I/O); one whose
-    * `state.commit` dominates names the state store; and so on.
-    */
-  private[graft] final class StreamMeter
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    private val phases = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong]()
-    private val triggers = new java.util.concurrent.atomic.AtomicLong
-    private def add(k: String, v: Long): Unit = {
-      phases.computeIfAbsent(k,
-        _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(v)
-      ()
-    }
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryIdle(e: QueryIdleEvent): Unit = ()
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      triggers.incrementAndGet()
-      e.progress.durationMs.forEach((k, v) => add(k, v))
-      e.progress.stateOperators.foreach { so =>
-        add("state.commit", so.commitTimeMs)
-        add("state.updates", so.allUpdatesTimeMs)
-        add("state.removals", so.allRemovalsTimeMs)
-      }
-    }
-    /** (triggers, phase → summed ms) since the last mark; resets. */
-    def mark(): (Long, Map[String, Long]) = {
-      val t = triggers.getAndSet(0L)
-      val m = scala.collection.mutable.Map[String, Long]()
-      phases.forEach { (k, v) =>
-        val x = v.getAndSet(0L)
-        if (x != 0L) m(k) = x
-      }
-      (t, m.toMap)
-    }
-  }
-
-  /** Stall-retry policy (r12 verdict task 1b): a query whose MEDIAN pass
-    * exceeds [[StallRatio]] × its own min (with an absolute floor so
-    * micro-noise never trips it) was stalled on 2+ of its passes — the
-    * min proves the query CAN run fast on this host right now, so the
-    * excess is environmental, not the plan. Up to [[MaxStallRetries]]
-    * extra passes run, each preceded by a calib slice (contention
-    * evidence rides the retry disclosure instead of GATING it — the r12
-    * re-runs showed the cpu probe can read quiet while the storage side
-    * is contended, so a calib gate would neuter exactly the stalls this
-    * exists for). HONESTY INVARIANT: retries only ADD samples — the
-    * stalled ones are never dropped, the median is over the full sample
-    * list, and every retried query's complete sample list + retry-time
-    * calib slices land in the artifact under `stall_retries` for the
-    * judge to re-derive any other estimator.
-    */
-  private[graft] val StallRatio = 4.0
-  private[graft] val StallFloorSec = 1.0
-  // 4, not 2: with 3 passes all stalled (the sustained-burst case), k
-  // quiet retries give sorted samples [q×k, s×3] and the upper median
-  // (index (3+k)/2) only lands on a quiet sample at k ≥ 4 — a cap of 2
-  // left a fully-bursted query guaranteed-contaminated even after the
-  // host quieted. Still bounded: worst case 4 extra passes per query,
-  // every sample disclosed.
-  private[graft] val MaxStallRetries = 4
-
-  /** True when the sample list carries the stall signature [[StallRatio]]
-    * documents. Exposed for the spec. */
-  private[graft] def stallSuspect(samples: Seq[Double]): Boolean = {
-    if (samples.size < 2) return false
-    val sorted = samples.sorted
-    val med = sorted(sorted.size / 2)
-    med > StallRatio * sorted.head && med - sorted.head > StallFloorSec
-  }
-
-  /** Sustained-stall hint: when EVERY pass is slow (contention spanning
-    * the query's whole pass window), the min proves nothing and
-    * [[stallSuspect]] stays silent — observed on a curated r13 attempt
-    * where m8_h264_video's three passes ran 11.4-39.4 s against a 0.41 s
-    * committed median under a load-21 co-tenant burst, and earned zero
-    * retries. The committed curated artifact in the repo root carries the
-    * last accepted quiet-run median per query, so a min [[StallRatio]]×
-    * over THAT prior earns the same bounded retries. The honesty
-    * invariant is unchanged — retries only ADD samples and the prior is
-    * disclosed per retried query (`prior_median`); a genuine plan
-    * regression costs at most [[MaxStallRetries]] extra passes and shows
-    * itself in the disclosure as retried samples that are all equally
-    * slow.
-    */
-  private[graft] def sustainedStallSuspect(samples: Seq[Double],
-      prior: Option[Double]): Boolean =
-    prior.exists(p => p > 0 && samples.nonEmpty && {
-      val mn = samples.min
-      mn > StallRatio * p && mn - p > StallFloorSec
-    })
-
-  /** Per-query medians of the committed curated artifact in the repo
-    * root — the [[sustainedStallSuspect]] prior. Absent file, absent
-    * queries map, malformed JSON, or an artifact measured at a DIFFERENT
-    * sf dir than this run (a 10× data scale legitimately puts every
-    * query 4×+ over the prior — retries there would be pure waste) all
-    * degrade to "no hint": the machinery then behaves exactly as before
-    * this hint existed.
-    */
-  private[graft] def priorMedians(repoRoot: String,
-      sfDir: String): Map[String, Double] =
-    try {
-      val p = java.nio.file.Paths.get(repoRoot, "BENCH_local.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1))
-        val qi = s.indexOf("\"queries\":{")
-        val end = if (qi < 0) -1 else s.indexOf('}', qi)
-        val m =
-          if (qi < 0 || end < 0 || !sf.contains(sfDir)) Map.empty[String, Double]
-          // full JSON number syntax INCLUDING exponents: the old
-          // [0-9][0-9.]* pattern would truncate 1.2E-4 at the 'E' and
-          // yield 1.2 — a silently-wrong prior, worse than no prior.
-          // toDoubleOption, not toDouble: the pattern admits tokens Double
-          // rejects ("1.2.3") — one malformed value must drop only ITS
-          // entry, not (via the outer catch-all) silently empty the whole
-          // map and bypass the no-usable-priors warning below
-          else "\"([^\"]+)\":(-?[0-9][0-9.]*(?:[eE][+-]?[0-9]+)?)".r
-            .findAllMatchIn(s.substring(qi + 11, end))
-            .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _))
-            .toMap
-        // a silently-broken prior must be noticeable (the artifact is
-        // there but produced nothing usable): one line, not a failure —
-        // the machinery degrades to exactly its pre-hint behavior
-        if (m.isEmpty) System.err.println(
-          "[bench] BENCH_local.json present but yielded no usable priors" +
-            (if (!sf.contains(sfDir))
-              s" (its sf ${sf.getOrElse("?")} != this run's $sfDir)"
-            else " (no parseable queries map)"))
-        m
-      }
-    } catch { case _: Throwable => Map.empty }
-
-  /** Quiet-composite acceptance (round-15 verdict task 1). The standing
-    * contiguous rule — one ~13-minute window whose whole calib series
-    * spreads < 1.4 — has been unsatisfiable for three sessions on this
-    * host (13 quiet-START attempts in r14, every one hammered mid-run,
-    * in-run spreads 1.43–18.5), while the r14 attempts ledger proved
-    * per-query quiet readings DO occur inside contended runs
-    * (per_query_best_of: sum 89.44 s, over_2x empty). This mode
-    * formalizes that observation as the fallback acceptance shape:
-    *
-    *   - every timed sample is BRACKETED by two parallel calib slices;
-    *   - a sample is QUIET iff both slices are ≤ [[QuietGateRatio]] × the
-    *     committed curated artifact's calib floor (its fastest recorded
-    *     parallel probe — the host's demonstrated uncontended speed);
-    *   - queries are retried round-robin across the whole session
-    *     (budget-bounded) until each holds `target` quiet samples; within
-    *     one visit, passes run back-to-back while the bracket between
-    *     them stays quiet (a quiet BURST — the slice after pass k is both
-    *     post(k) and pre(k+1)), matching the committed prior's
-    *     three-back-to-back-passes measurement convention instead of
-    *     paying a cold-cache reanimation on every sample;
-    *   - the PUBLISHED per-query stat is the upper median over quiet
-    *     samples only; a query that never gates quiet publishes the
-    *     median over ALL its samples and is NAMED in `composite.unquiet`
-    *     (so a reader can never mistake a contended reading for a gated
-    *     one).
-    *
-    * HONESTY INVARIANT (same convention as the stall machinery): gating
-    * selects, it never hides — every sample ever timed rides in the
-    * artifact under `composite.per_query` with its two adjacent probe
-    * seconds and quiet verdict, the gate/floor/threshold are all in the
-    * artifact, and a judge can recompute any other estimator (including
-    * the ungated all-samples median) from the disclosure alone. A genuine
-    * plan regression cannot launder itself through the gate: its quiet
-    * samples are exactly the ones measured on a demonstrably quiet host,
-    * which is where a regression shows CLEANEST. The contiguous rule
-    * remains the preferred path — a fully quiet run gates every sample on
-    * the first pass and degenerates to the old three-pass shape.
-    */
-  private[graft] val QuietGateRatio = 1.3
-
-  /** Floor for the quiet gate: the fastest parallel calib probe
-    * (pre-suite `parallel_s` + mid-run `series`) of the committed curated
-    * artifact at `repoRoot/BENCH_local.json`. The MIN, not the median: the
-    * floor is "what this host demonstrably does when nothing else runs",
-    * and any probe that beat the median proves the capacity. None when
-    * the file is absent/corrupt, carries no calib, or was measured at a
-    * different thread count (a cross-thread-count probe is a different
-    * workload — gating against it is meaningless); the caller must then
-    * refuse composite mode rather than gate against nothing.
-    */
-  private[graft] def committedCalibFloor(repoRoot: String,
-      threads: Int): Option[Double] =
-    try {
-      val p = java.nio.file.Paths.get(repoRoot, "BENCH_local.json")
-      if (!java.nio.file.Files.exists(p)) None
-      else {
-        val txt = java.nio.file.Files.readString(p).replace("\\\"", "\"")
-        """"calib"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(txt).flatMap { m =>
-          val body = m.group(1)
-          val thr = """"threads"\s*:\s*(\d+)""".r.findFirstMatchIn(body)
-            .flatMap(_.group(1).toIntOption)
-          if (!thr.contains(threads)) None
-          else {
-            val par = """"parallel_s"\s*:\s*([0-9.eE+-]+)""".r
-              .findFirstMatchIn(body).flatMap(_.group(1).toDoubleOption)
-            val series = """"series"\s*:\s*\[([^\]]*)\]""".r
-              .findFirstMatchIn(body).toSeq
-              .flatMap(_.group(1).split(",").toSeq.map(_.trim)
-                .filter(_.nonEmpty).flatMap(_.toDoubleOption))
-            val probes = (par.toSeq ++ series).filter(_ > 0)
-            probes.minOption
-          }
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Self-consistency trim: the calib brackets bound the host's state
-    * AROUND a sample, but a co-tenant burst shorter than the pass can sit
-    * entirely INSIDE a multi-second query while both 0.1 s brackets read
-    * quiet — observed on the first r15 composite run, where every query
-    * gated "quiet" yet the median drifted +44% uniformly under a known
-    * concurrent load. The queries are deterministic noop-sink plans, so
-    * quiet samples of one query must agree up to host noise: samples more
-    * than [[CompositeTrimRatio]] × the query's own quiet MINIMUM above it
-    * were contended mid-pass and are excluded from the published median
-    * (never from the artifact). On a genuinely quiet host all samples
-    * fall inside the trim and this is exactly the plain upper median of
-    * three passes — the old rule's estimator.
-    */
-  private[graft] val CompositeTrimRatio = 1.25
-
-  /** Publication rule for one query's composite samples
-    * `(seconds, quiet)`: upper median over the self-consistent subset of
-    * the QUIET samples (see [[CompositeTrimRatio]]), min / max over ALL
-    * quiet samples (the honest spread); a query with no quiet sample
-    * publishes over everything it has with `unquiet = true`. Exposed for
-    * the spec.
-    */
-  private[graft] def compositePublish(
-      samples: Seq[(Double, Boolean)]): (Double, Double, Double, Boolean) = {
-    require(samples.nonEmpty, "compositePublish on zero samples")
-    val quiet = samples.collect { case (s, true) => s }.sorted
-    if (quiet.isEmpty) {
-      val all = samples.map(_._1).sorted
-      (all(all.size / 2), all.head, all.last, true)
-    } else {
-      val trimmed = quiet.takeWhile(_ <= CompositeTrimRatio * quiet.head)
-      (trimmed(trimmed.size / 2), quiet.head, quiet.last, false)
-    }
-  }
-
-  /** Prior-chase scheduling (composite mode): keep a query in the
-    * round-robin while its best QUIET sample has not come within
-    * [[PriorChaseRatio]] × its committed prior (absolute excess over
-    * [[PriorChaseFloorSec]], so micro-queries never churn). Scheduling
-    * only — the published estimator remains a pure function of the
-    * samples (trimmed median of quiet samples): the prior decides when to
-    * STOP LOOKING for a quiet window, never which samples count. The case
-    * this exists for: a co-tenant stealing MEMORY BANDWIDTH inflates
-    * every sample ~uniformly while the register-resident CPU brackets
-    * read quiet — three agreeing-but-inflated samples would otherwise
-    * satisfy the target and stop sampling exactly the query that needs a
-    * later, genuinely quiet window (observed on the second r15 composite
-    * run: +24.8% median drift under calib slices FASTER than the r12
-    * floor). A query that never reaches the bar burns its bounded attempt
-    * cap and publishes what it demonstrated — with every sample and both
-    * probe families disclosed, that outcome is evidence of a host floor
-    * shift (or a real regression), which is exactly what the artifact
-    * should say then.
-    */
-  private[graft] val PriorChaseRatio = 1.35
-  private[graft] val PriorChaseFloorSec = 0.2
-
-  /** True while the chase should keep sampling. Exposed for the spec. */
-  private[graft] def priorChase(bestQuiet: Option[Double],
-      prior: Option[Double]): Boolean =
-    (bestQuiet, prior) match {
-      case (Some(b), Some(p)) if p > 0 =>
-        b > PriorChaseRatio * p && b - p > PriorChaseFloorSec
-      case _ => false
-    }
-
-  /** Memory-bandwidth probe: a register-resident xorshift spin is immune
-    * to LLC/DRAM bandwidth steal — the r15 composite runs measured
-    * parallel CPU probes FASTER than the r12 floor beside uniformly
-    * inflated query medians, the signature of a co-tenant saturating the
-    * memory side, invisible to loadavg and to [[calibWork]]. This probe
-    * streams a shared 512 MiB long array across `threads` threads (each
-    * summing a disjoint slice) and reports seconds; it rides in the
-    * calib record and beside every composite sample's brackets as
-    * ATTRIBUTION evidence (not a gate). The committed curated artifact
-    * carries its quiet floor as `calib.mem_s` (established r15/r16), so a
-    * future round MAY gate on `mem_s` the way the CPU slices gate on the
-    * calib floor — compare against the committed artifact's value, same
-    * thread count, same 1.3× band.
+  /** Memory-bandwidth probe: streams a 512 MiB long array across
+    * `threads` threads (each summing a disjoint slice) and returns the
+    * seconds. A register-resident spin like [[calibWork]] cannot see a
+    * co-tenant saturating LLC/DRAM bandwidth; this probe can. Recorded as
+    * `calib.mem_s` — attribution evidence, nothing normalizes by it. The
+    * array is garbage once the probe returns, so it never pins driver
+    * heap through the suite.
     */
   private val MemProbeLongs = (512L * 1024 * 1024 / 8).toInt
-  @volatile private var memArr: Array[Long] = null
-  /** Drops the probe array once no further [[memSlice]] calls are coming —
-    * the 512 MiB otherwise stays pinned in the bench JVM's heap for the
-    * rest of the process (r15 verdict note). The next memSlice call, if
-    * any, just re-initializes. */
-  private[graft] def memRelease(): Unit = { memArr = null }
   private[graft] def memSlice(threads: Int): Double = {
-    if (memArr == null) {
-      val a = new Array[Long](MemProbeLongs)
-      var i = 0
-      while (i < a.length) { a(i) = i.toLong * 0x9E3779B97F4A7C15L; i += 1 }
-      memArr = a
-    }
-    val a = memArr
+    val a = new Array[Long](MemProbeLongs)
+    var i = 0
+    while (i < a.length) { a(i) = i.toLong * 0x9E3779B97F4A7C15L; i += 1 }
     val per = a.length / threads
     val sums = new Array[Long](threads)
     val pool = (0 until threads).map { k =>
@@ -610,13 +284,6 @@ object Bench {
       .split("\\s+").take(3).mkString(" ")
     catch { case _: Throwable => "n/a" }
 
-  private def dirBytes(d: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(d))
-  }
-
   /** Total ROWS across every parquet table in a sf dir (metadata-only
     * counts). The growth denominator must be row growth, not byte
     * growth: parquet's fixed per-file overhead inflates a tiny sf's
@@ -637,44 +304,30 @@ object Bench {
       }.sum).getOrElse(0L)
   }
 
+  /** One query's timed passes: median, min and max wall seconds, whether
+    * every pass succeeded, the first pass's exchange meters and wall time
+    * (the `amortized` disclosure). */
+  private final case class Timed(name: String, med: Double, min: Double,
+      max: Double, ok: Boolean, shuffleBytes: Long, spillBytes: Long,
+      firstPass: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // artifacts land in the repo the bench runs FROM (sbt sets user.dir to
     // the project root), overridable — never a hardcoded absolute path
     val repoRoot = sys.env.getOrElse("GRAFT_REPO_ROOT",
       sys.props.getOrElse("user.dir", "."))
-    // Quiet-composite fallback acceptance mode (see QuietGateRatio doc).
-    // The floor is resolved BEFORE any expensive work: a composite run
-    // that cannot gate is not a weaker composite run, it is a different
-    // (ungated) artifact pretending — refuse fast instead.
-    val compositeMode = sys.env.get("GRAFT_BENCH_COMPOSITE").contains("1")
-    val compositeFloor: Option[Double] =
-      if (!compositeMode) None
-      else sys.env.get("GRAFT_QUIET_FLOOR_S").flatMap(_.toDoubleOption)
-        .orElse(committedCalibFloor(repoRoot, cpus.toInt))
-    if (compositeMode && compositeFloor.isEmpty) {
-      System.err.println("[bench] composite mode requested but no quiet " +
-        "floor: BENCH_local.json absent/corrupt/thread-mismatched and no " +
-        "GRAFT_QUIET_FLOOR_S override — refusing to run ungated")
-      sys.exit(2)
-    }
     val loadStart = loadavg()
     // calibrate BEFORE the session exists — no Spark threads compete
-    val (calibSingle, calibParallel) = calibrate(cpus.toInt)
+    val (calibSingle, calibParallel) = calibrate(cpus)
     val (calibIoW, calibIoR) = calibIo()
-    val calibMem = memSlice(cpus.toInt)
-    val spark = graft.core.GraftSession.local(cpus.toInt, "graft-bench")
+    val calibMem = memSlice(cpus)
+    val spark = graft.core.GraftSession.local(cpus, "graft-bench")
 
     // Stable order: Map iteration is hash-ordered, which would hand the
     // JVM/codegen warmup cost to a random query each run.
-    // Dev-only subset filter (SPARK_GRAFT_ONLY=q31_percentiles,q41_…):
-    // lets a perf iteration time two queries without the full suite. The
-    // repo artifact below is only written for FULL runs.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
 
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Boolean =
@@ -686,8 +339,7 @@ object Bench {
         false
       }
 
-    val meter = new ExchangeMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = graft.core.RunMeter.attach(spark)
 
     // Untimed warmup at the smallest sf: JIT + codegen + classloading are
     // one-time JVM costs, not per-query work; data stays cold for sfDir.
@@ -697,12 +349,9 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     val smallShuffle: Map[String, Long] = ordered.map { case (name, fn) =>
-      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-      meter.mark()
       val ok = runOne(fn, warmDir)
-      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-      val (sh, _) = meter.mark()
-      name -> (if (ok) sh else -1L)
+      val w = meter.mark()
+      name -> (if (ok) w.shuffleBytes else -1L)
     }.toMap
     // drop working sets persisted by multi-pass queries (LSH dedup) during
     // warmup — the timed pass should start from a clean storage pool
@@ -719,16 +368,15 @@ object Bench {
     // against the ~100 s total, decisive for attributing a slow run.
     val CalibSliceEvery = 20
     val calibSlices = scala.collection.mutable.ArrayBuffer[Double]()
-    def calibSlice(): Double = {
+    def calibSlice(): Unit = {
       val iters = CalibIters / 8
-      val pool = (0 until cpus.toInt).map { k =>
+      val pool = (0 until cpus).map { k =>
         new Thread(() => { calibSink ^= calibWork(iters, 17L + k) })
       }
       val t0 = System.nanoTime()
       pool.foreach(_.start()); pool.foreach(_.join())
-      val v = (System.nanoTime() - t0) / 1e9 * 8
-      calibSlices += v
-      v
+      calibSlices += (System.nanoTime() - t0) / 1e9 * 8
+      ()
     }
 
     // Median of several timed passes per query: a single contended pass on
@@ -736,246 +384,55 @@ object Bench {
     // robust to one bad sample and min/max records the observed spread.
     // Shuffle/spill bytes come from the FIRST timed pass (deterministic
     // per query — the plan doesn't change between passes). Streaming
-    // passes additionally carry per-pass StreamingQueryProgress phase
-    // sums ([[StreamMeter]]), and a query showing the stall signature
-    // ([[stallSuspect]]) earns bounded extra passes — all samples kept.
-    val streamMeter = new StreamMeter
-    spark.streams.addListener(streamMeter)
-    val priors = priorMedians(repoRoot, sfDir)
-    var sinceSlice = 0
+    // passes additionally carry their trigger-phase sums, so a slow pass
+    // names where it sat (trigger machinery, state store, or outside the
+    // triggers entirely).
     val loadByQuery = scala.collection.mutable.LinkedHashMap[String, String]()
-    // retried query -> (all samples incl. retries, calib slice per retry)
-    val retryDisclosure =
-      scala.collection.mutable.LinkedHashMap[String, (Seq[Double], Seq[Double])]()
     // streaming query -> per-pass (wall s, triggers, phase -> ms)
     val streamPhases = scala.collection.mutable
       .LinkedHashMap[String, Seq[(Double, Long, Map[String, Long])]]()
-    // composite-mode state (all empty/unused in normal mode); every knob
-    // lands in the artifact so the acceptance is recheckable after the fact
-    val compositeGate = compositeFloor.map(_ * QuietGateRatio)
-    val compositeTarget = sys.env.get("GRAFT_COMPOSITE_TARGET")
-      .flatMap(_.toIntOption).getOrElse(3)
-    val compositeMaxAttempts = sys.env.get("GRAFT_COMPOSITE_MAX_ATTEMPTS")
-      .flatMap(_.toIntOption).getOrElse(12)
-    val compositeBudgetS = sys.env.get("GRAFT_BENCH_BUDGET_S")
-      .flatMap(_.toDoubleOption).getOrElse(7200.0)
-    // query -> every sample ever timed:
-    // (wall s, ok, cpu pre-slice, cpu post-slice, mem pre, mem post)
-    val compositeSamples = scala.collection.mutable.LinkedHashMap[
-      String, scala.collection.mutable.ArrayBuffer[
-        (Double, Boolean, Double, Double, Double, Double)]]()
-    val compositeFailed = scala.collection.mutable.Set[String]()
-    var compositeRounds = 0
-    var compositeHotSkips = 0
-    var compositeElapsedS = 0.0
-    val results: Seq[(String, Double, Double, Double, Boolean, Long, Long, Double)] =
-      if (compositeMode) {
-        // Quiet-composite sampling (see QuietGateRatio doc): round-robin
-        // over the suite, bracketing every pass with two parallel calib
-        // slices, until each query holds `compositeTarget` quiet samples
-        // or the budget/attempt caps bound the session. A query's FIRST
-        // pass always runs (shuffle meters + at least one disclosed
-        // sample); later passes are skipped while the pre-slice reads hot
-        // — a pass that cannot gate is wasted heat under a co-tenant
-        // burst, and the rest of the round is the natural backoff.
-        val gate = compositeGate.get
-        val t0Suite = System.nanoTime()
-        def elapsedS = (System.nanoTime() - t0Suite) / 1e9
-        val shufByQ = scala.collection.mutable.Map[String, Long]()
-        val spillByQ = scala.collection.mutable.Map[String, Long]()
-        ordered.foreach { case (n, _) =>
-          compositeSamples(n) = scala.collection.mutable.ArrayBuffer[
-            (Double, Boolean, Double, Double, Double, Double)]()
-        }
-        def quietTimes(n: String): Seq[Double] = compositeSamples(n).collect {
-          case (s, true, pre, post, _, _) if pre <= gate && post <= gate => s
-        }.toSeq
-        // count of SELF-CONSISTENT quiet samples (see CompositeTrimRatio):
-        // a quiet-bracketed sample contended mid-pass must not satisfy the
-        // target, or the loop stops sampling exactly the query that needs
-        // more evidence
-        def quietN(n: String): Int = {
-          val q = quietTimes(n)
-          if (q.isEmpty) 0
-          else { val mn = q.min; q.count(_ <= CompositeTrimRatio * mn) }
-        }
-        def wants(n: String): Boolean = !compositeFailed(n) &&
-          compositeSamples(n).size < compositeMaxAttempts &&
-          (quietN(n) < compositeTarget ||
-            priorChase(quietTimes(n).minOption, priors.get(n)))
-        while (ordered.exists(o => wants(o._1)) && elapsedS < compositeBudgetS) {
-          compositeRounds += 1
-          var ranAny = false
-          val it = ordered.iterator
-          while (it.hasNext && elapsedS < compositeBudgetS) {
-            val (name, fn) = it.next()
-            if (wants(name)) {
-              val buf = compositeSamples(name)
-              val pre = calibSlice()
-              if (pre > gate && buf.nonEmpty) {
-                compositeHotSkips += 1
-                Thread.sleep(3000)
-              } else {
-                ranAny = true
-                loadByQuery(name) = loadavg()
-                // Quiet BURST: the committed prior (and BASELINE.md's
-                // convention) times three BACK-TO-BACK passes — warm JIT,
-                // warm page cache. Round-robin singles pay a cold-cache
-                // reanimation on every visit: attempts 3–5 published
-                // median-totals 100.6–101.7 against quiet min-sums
-                // 91.6–94.2, a ~70 ms tax on each of ~100 queries that no
-                // bracket can see because it is not contention. So once a
-                // visit's first pass lands, follow-up passes run
-                // immediately while the query still wants samples and the
-                // shared bracket stays quiet: the slice after pass k is
-                // both post(k) and pre(k+1), disclosed per sample like
-                // any other — a judge recomputing the gate sees the
-                // shared values directly in composite.per_query.
-                var preCur = pre
-                var preMemCur = memSlice(cpus.toInt)
-                var burst = true
-                while (burst) {
-                  org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-                  meter.mark(); streamMeter.mark()
-                  val t0 = System.nanoTime()
-                  val ok = runOne(fn, sfDir)
-                  val t = (System.nanoTime() - t0) / 1e9
-                  org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-                  val m = meter.mark()
-                  if (buf.isEmpty) { shufByQ(name) = m._1; spillByQ(name) = m._2 }
-                  val (trig, ph) = streamMeter.mark()
-                  if (trig > 0L) streamPhases(name) =
-                    streamPhases.getOrElse(name, Seq.empty) :+ ((t, trig, ph))
-                  val post = calibSlice()
-                  val postMem = memSlice(cpus.toInt)
-                  buf += ((t, ok, preCur, post, preMemCur, postMem))
-                  if (!ok) { compositeFailed += name; burst = false }
-                  else {
-                    burst = wants(name) && post <= gate &&
-                      elapsedS < compositeBudgetS
-                    preCur = post; preMemCur = postMem
-                  }
-                }
-              }
-            }
-          }
-          // an entire round of hot pre-slices: the host is saturated —
-          // sleep instead of spinning probe after probe into the burst
-          if (!ranAny && elapsedS < compositeBudgetS) Thread.sleep(15000)
-        }
-        compositeElapsedS = elapsedS
-        ordered.map { case (name, _) =>
-          val buf = compositeSamples(name)
-          val okRun = buf.nonEmpty && !compositeFailed(name)
-          if (!okRun)
-            (name, 0.0, 0.0, 0.0, false, shufByQ.getOrElse(name, 0L),
-              spillByQ.getOrElse(name, 0L),
-              buf.headOption.map(_._1).getOrElse(0.0))
-          else {
-            val (med, mn, mx, _) = compositePublish(buf.toSeq.collect {
-              case (s, true, pre, post, _, _) =>
-                (s, pre <= gate && post <= gate) })
-            (name, med, mn, mx, true, shufByQ.getOrElse(name, 0L),
-              spillByQ.getOrElse(name, 0L), buf.head._1)
-          }
-        }
-      } else ordered.map { case (name, fn) =>
-      if (sinceSlice >= CalibSliceEvery) { calibSlice(); sinceSlice = 0 }
-      sinceSlice += 1
+    val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
+      if (i > 0 && i % CalibSliceEvery == 0) calibSlice()
       loadByQuery(name) = loadavg()
-      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-      meter.mark(); streamMeter.mark()
-      var shufBytes = 0L
-      var spillBytes = 0L
-      val passes = scala.collection.mutable
-        .ArrayBuffer[(Double, Boolean, Long, Map[String, Long])]()
-      def onePass(first: Boolean): Unit = {
+      val passes = (1 to Passes).map { _ =>
         val t0 = System.nanoTime()
         val ok = runOne(fn, sfDir)
-        val t = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-        if (first) {
-          val m = meter.mark()
-          shufBytes = m._1; spillBytes = m._2
-        }
-        val (trig, ph) = streamMeter.mark()
-        passes += ((t, ok, trig, ph))
-        ()
+        ((System.nanoTime() - t0) / 1e9, ok, meter.mark())
       }
-      onePass(first = true)
-      (2 to Passes).foreach(_ => onePass(first = false))
-      val retryCalibs = scala.collection.mutable.ArrayBuffer[Double]()
-      while (passes.forall(_._2) && retryCalibs.size < MaxStallRetries &&
-          (stallSuspect(passes.map(_._1).toSeq) ||
-            sustainedStallSuspect(passes.map(_._1).toSeq,
-              priors.get(name)))) {
-        calibSlice() // contention evidence recorded AT retry time
-        retryCalibs += calibSlices.last
-        onePass(first = false)
-      }
-      if (retryCalibs.nonEmpty)
-        retryDisclosure(name) = (passes.map(_._1).toSeq, retryCalibs.toSeq)
-      if (passes.exists(_._3 > 0L))
-        streamPhases(name) = passes.map(p => (p._1, p._3, p._4)).toSeq
-      val ok = passes.forall(_._2)
-      val firstPass = passes.head._1
+      if (passes.exists(_._3.triggers > 0L))
+        streamPhases(name) = passes.map { case (t, _, w) => (t, w.triggers, w.phases) }
       val times = passes.map(_._1).sorted
-      (name, times(times.size / 2), times.head, times.last, ok, shufBytes,
-        spillBytes, firstPass)
+      val (first, _, firstW) = passes.head
+      Timed(name, times(times.size / 2), times.head, times.last,
+        passes.forall(_._2), firstW.shuffleBytes, firstW.spillBytes, first)
     }
-    // both modes are past their last memSlice call (pre-suite probe in
-    // normal mode, per-sample brackets in composite) — release the probe
-    // array instead of pinning 512 MiB of driver heap through publication
-    memRelease()
+    val okRuns = results.filter(_.ok)
     def f(v: Double): String = "%.4f".format(v)
     // failed queries report null (not a near-zero time that would read as
     // a fast success) and are named in "failed"
-    val qs = results.map { case (k, med, _, _, ok, _, _, _) =>
-      "\"" + k + "\":" + (if (ok) f(med) else "null")
+    val qs = results.map { r =>
+      "\"" + r.name + "\":" + (if (r.ok) f(r.med) else "null")
     }.mkString("{", ",", "}")
-    val spread = results.collect { case (k, _, min, max, true, _, _, _) =>
-      "\"" + k + "\":{\"min\":" + f(min) + ",\"max\":" + f(max) + "}"
+    val spread = okRuns.map { r =>
+      "\"" + r.name + "\":{\"min\":" + f(r.min) + ",\"max\":" + f(r.max) + "}"
     }.mkString("{", ",", "}")
-    val shuffle = results.collect { case (k, _, _, _, true, sh, sp, _) =>
-      "\"" + k + "\":{\"shuffle_mb\":" + f(sh / 1048576.0) +
-        ",\"spill_mb\":" + f(sp / 1048576.0) + "}"
+    val shuffle = okRuns.map { r =>
+      "\"" + r.name + "\":{\"shuffle_mb\":" + f(r.shuffleBytes / 1048576.0) +
+        ",\"spill_mb\":" + f(r.spillBytes / 1048576.0) + "}"
     }.mkString("{", ",", "}")
     // train-once/serve-many disclosure: per amortized query, the memoized
     // cache its plan consumes and the first timed pass (train + serve) —
     // the median alone would silently exclude training cost
-    val amortizedJson = results.collect {
-      case (k, _, _, _, true, _, _, first) if amortized.contains(k) =>
-        "\"" + k + "\":{\"cache\":\"" + amortized(k) +
-          "\",\"first_pass\":" + f(first) + "}"
+    val amortizedJson = okRuns.filter(r => amortized.contains(r.name)).map { r =>
+      "\"" + r.name + "\":{\"cache\":\"" + amortized(r.name) +
+        "\",\"first_pass\":" + f(r.firstPass) + "}"
     }.mkString("{", ",", "}")
-    // Stall disclosures. `stall_retries` (compact + full): every retried
-    // query's COMPLETE sample list — stalled passes included — plus the
-    // calib slice timed at each retry, so a judge can recompute any
-    // estimator and see whether the host read contended at retry time.
-    // `stall_phases` (compact) / `streaming` (full): per-pass
-    // StreamingQueryProgress phase sums; the compact line carries them
-    // only for stall SUSPECTS (retried, or final spread still over the
-    // stall bar) to stay inside the driver's tail-capture window — under
-    // quiet conditions both compact fields are empty.
-    val retryJson = retryDisclosure.map { case (k, (samples, cal)) =>
-      "\"" + k + "\":{\"samples\":" + samples.map(f).mkString("[", ",", "]") +
-        ",\"calib_at_retry\":" + cal.map(f).mkString("[", ",", "]") +
-        priors.get(k).map(p => ",\"prior_median\":" + f(p)).getOrElse("") +
-        ",\"load\":\"" + loadByQuery.getOrElse(k, "n/a") + "\"}"
-    }.mkString("{", ",", "}")
-    def phasesJson(ps: Seq[(Double, Long, Map[String, Long])]): String =
-      ps.map { case (s, trig, ph) =>
+    val streamingJson = streamPhases.map { case (k, ps) =>
+      "\"" + k + "\":" + ps.map { case (s, trig, ph) =>
         "{\"s\":" + f(s) + ",\"triggers\":" + trig + ",\"ms\":" +
           ph.toSeq.sortBy(_._1).map { case (p, v) => "\"" + p + "\":" + v }
             .mkString("{", ",", "}") + "}"
       }.mkString("[", ",", "]")
-    val streamingJson = streamPhases.map { case (k, ps) =>
-      "\"" + k + "\":" + phasesJson(ps)
-    }.mkString("{", ",", "}")
-    val stallPhasesJson = streamPhases.collect {
-      case (k, ps) if retryDisclosure.contains(k) ||
-          stallSuspect(ps.map(_._1)) =>
-        "\"" + k + "\":" + phasesJson(ps)
     }.mkString("{", ",", "}")
     val loadJson = loadByQuery.map { case (k, l) =>
       "\"" + k + "\":\"" + l + "\""
@@ -986,30 +443,17 @@ object Bench {
       .flatMap(_.split("\\s+").headOption.flatMap(_.toDoubleOption))
       .maxOption.getOrElse(0.0)
     calibSlice() // tail probe: cover contention arriving near the end
-    val failed = results.collect { case (k, _, _, _, false, _, _, _) => "\"" + k + "\"" }
+    val failed = results.filterNot(_.ok).map("\"" + _.name + "\"")
       .mkString("[", ",", "]")
-    val total = results.collect { case (_, med, _, _, true, _, _, _) => med }.sum
+    val total = okRuns.map(_.med).sum
     // sum-of-min rides alongside the median total: on a host contended in
     // bursts the min per query is the closest observable to the uncontended
     // time, so (total, total_min) bracket the true suite cost
-    val totalMin = results.collect { case (_, _, min, _, true, _, _, _) => min }.sum
+    val totalMin = okRuns.map(_.min).sum
     // current host speed for normalization = median over ALL parallel
-    // probes (pre-suite + mid-run slices). COMPOSITE exception: the
-    // published per-query numbers are quiet-gated, so the host-speed
-    // estimate that normalizes them must come from the same windows —
-    // the slices ADJACENT to accepted samples — or a contended session's
-    // hot probes would over-correct numbers that were never measured hot.
+    // probes (pre-suite + mid-run slices)
     val calibParallelMed = {
-      val basis = compositeGate match {
-        case Some(gate) if compositeMode =>
-          val adj = compositeSamples.valuesIterator.flatten.collect {
-            case (_, true, pre, post, _, _) if pre <= gate && post <= gate =>
-              Seq(pre, post)
-          }.flatten.toSeq
-          if (adj.nonEmpty) adj else calibParallel +: calibSlices.toSeq
-        case _ => calibParallel +: calibSlices.toSeq
-      }
-      val all = basis.sorted
+      val all = (calibParallel +: calibSlices.toSeq).sorted
       all(all.size / 2)
     }
 
@@ -1022,11 +466,13 @@ object Bench {
     val dataRatio = dirRows(spark, sfDir).toDouble /
       math.max(1L, dirRows(spark, warmDir))
     val MinSmall = 64L * 1024
-    val growthRows = results.collect { case (k, _, _, _, true, sh, _, _) =>
-      val small = smallShuffle.getOrElse(k, -1L)
-      val ratio = if (small >= MinSmall && sh >= 0) Some(sh.toDouble / small)
-                  else None
-      (k, small, sh, ratio)
+    val growthRows = okRuns.map { r =>
+      val small = smallShuffle.getOrElse(r.name, -1L)
+      val ratio =
+        if (small >= MinSmall && r.shuffleBytes >= 0)
+          Some(r.shuffleBytes.toDouble / small)
+        else None
+      (r.name, small, r.shuffleBytes, ratio)
     }
     val growthJson = growthRows.map { case (k, small, big, ratio) =>
       "\"" + k + "\":{\"small_mb\":" + f(math.max(0L, small) / 1048576.0) +
@@ -1046,8 +492,7 @@ object Bench {
     // round registered, and unlike BENCH_local.json it is never
     // overwritten by in-round bench reruns — so round N+1 is never
     // judged on denominator growth.
-    val okMedians = results.collect {
-      case (k, med, _, _, true, _, _, _) => k -> med }.toMap
+    val okMedians = okRuns.map(r => r.name -> r.med).toMap
     val perQueryMedian = {
       val v = okMedians.values.toSeq.sorted
       if (v.isEmpty) 0.0 else v(v.size / 2)
@@ -1069,8 +514,7 @@ object Bench {
           } catch { case _: Throwable => None }
         }
     }
-    val okMins = results.collect {
-      case (k, _, min, _, true, _, _, _) => k -> min }.toMap
+    val okMins = okRuns.map(r => r.name -> r.min).toMap
     val commonJson = prevRound match {
       case Some((round, src, keys)) =>
         val common = okMedians.view.filterKeys(keys).values
@@ -1093,8 +537,8 @@ object Bench {
           case Some(pc) if pc.noisy =>
             s""","calib_vs":"${pc.src} (calib spread ${f(pc.spread)} > $NoisyCalibSpread; no quiet prior calib - normalization refused)","baseline_calib_spread":${f(
               pc.spread)},"normalized_total":null,"normalized_total_min":null"""
-          case Some(pc) if pc.threads != cpus.toInt =>
-            s""","calib_vs":"${pc.src} (threads ${pc.threads} != ${cpus.toInt}; not comparable)","baseline_calib_spread":${f(
+          case Some(pc) if pc.threads != cpus =>
+            s""","calib_vs":"${pc.src} (threads ${pc.threads} != $cpus; not comparable)","baseline_calib_spread":${f(
               pc.spread)},"normalized_total":null,"normalized_total_min":null"""
           case Some(pc) if calibParallelMed > 0 =>
             val skippedNote =
@@ -1114,101 +558,31 @@ object Bench {
       case None => "null"
     }
 
-    // stdout carries the COMPACT contract line only (totals + per-query
-    // medians): round 3's single line grew past the driver's tail-capture
-    // window once the exchange map joined it, and the whole artifact parsed
-    // as null. The full detail (spread + shuffle/spill meters) goes to a
-    // repo file so every round's bench is self-contained regardless of how
-    // much stdout the harness keeps.
+    // stdout carries the COMPACT contract line only: a single line grew past
+    // the driver's tail-capture window once per-query detail rode along, and
+    // the whole artifact parsed as null. The full record (spread, exchange
+    // meters, growth, streaming phases, per-query load) goes to the `detail`
+    // file named on the line. BENCH_local.json is the curated, committed
+    // artifact and is written only under GRAFT_BENCH_CURATED=1; any other
+    // run — the driver flow — writes BENCH_driver.json, so a contended run
+    // can never overwrite the curated evidence. The compact line keeps
+    // `calib`: the next round's priorCalib() normalizes against the calib
+    // object it finds in the driver-captured BENCH_rN.json, i.e. in THIS
+    // line.
     val loadEnd = loadavg()
     val calibJson = s"""{"single_s":${f(calibSingle)},"parallel_s":${f(
-      calibParallel)},"threads":${cpus.toInt},"parallel_med":${f(
+      calibParallel)},"threads":$cpus,"parallel_med":${f(
       calibParallelMed)},"io_write_s":${f(calibIoW)},"io_read_s":${f(
       calibIoR)},"mem_s":${f(calibMem)},"series":${calibSlices.map(f)
       .mkString("[", ",", "]")}}"""
-    // Quiet-composite disclosure. Summary (both lines): every acceptance
-    // knob + the unquiet list, so a reader can never mistake a contended
-    // reading for a gated one. Detail (full artifact only): EVERY sample
-    // ever timed with its two adjacent probe seconds and quiet verdict —
-    // the gate selects, it never hides, and any other estimator is
-    // recomputable from this block alone.
-    val compositeSummary = compositeGate match {
-      case Some(gate) if compositeMode =>
-        val unquiet = ordered.collect {
-          case (n, _) if !compositeFailed(n) &&
-              compositeSamples.get(n).exists(b => b.nonEmpty &&
-                !b.exists { case (_, ok, pre, post, _, _) =>
-                  ok && pre <= gate && post <= gate }) => "\"" + n + "\""
-        }.mkString("[", ",", "]")
-        // queries whose best quiet sample never reached the prior-chase
-        // bar before the attempt cap/budget: the committed prior was NOT
-        // demonstrated this session — named so a floor shift can never
-        // masquerade as a quiet reading
-        val chased = ordered.collect {
-          case (n, _) if !compositeFailed(n) &&
-              priorChase(compositeSamples.get(n).toSeq.flatMap(_.collect {
-                case (s, true, pre, post, _, _)
-                  if pre <= gate && post <= gate => s
-              }).minOption, priors.get(n)) => "\"" + n + "\""
-        }.mkString("[", ",", "]")
-        s""","mode":"quiet_composite","composite":{"floor_s":${f(
-          compositeFloor.get)},"gate_ratio":$QuietGateRatio,"gate_s":${f(
-          gate)},"trim_ratio":$CompositeTrimRatio,"prior_chase_ratio":$PriorChaseRatio,"target_quiet":$compositeTarget,"max_attempts":$compositeMaxAttempts,"budget_s":${f(
-          compositeBudgetS)},"elapsed_s":${f(compositeElapsedS)},"rounds":$compositeRounds,"hot_skips":$compositeHotSkips,"unquiet":$unquiet,"prior_not_reached":$chased}"""
-      case _ => ""
-    }
-    val compositeDetail = compositeGate match {
-      case Some(gate) if compositeMode =>
-        val perQ = compositeSamples.map { case (n, buf) =>
-          "\"" + n + "\":{\"quiet_n\":" + buf.count {
-            case (_, ok, pre, post, _, _) => ok && pre <= gate && post <= gate
-          } + priors.get(n).map(p => ",\"prior\":" + f(p)).getOrElse("") +
-            ",\"samples\":" + buf.map { case (s, ok, pre, post, pm, qm) =>
-            "{\"s\":" + f(s) + ",\"ok\":" + ok + ",\"pre\":" + f(pre) +
-              ",\"post\":" + f(post) + ",\"pre_mem\":" + f(pm) +
-              ",\"post_mem\":" + f(qm) + ",\"quiet\":" +
-              (ok && pre <= gate && post <= gate) + "}"
-          }.mkString("[", ",", "]") + "}"
-        }.mkString("{", ",", "}")
-        s""","composite_per_query":$perQ"""
-      case _ => ""
-    }
-    val env = s""""passes":$Passes,"failed":$failed,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","load_peak":${f(loadPeak)},"calib":$calibJson,"data_ratio":${f(dataRatio)},"growth_flagged":$growthFlagged,"amortized":$amortizedJson,"stall_retries":$retryJson,"per_query_median":${f(perQueryMedian)},"common_subset":$commonJson""" + compositeSummary
-    // The COMPACT stdout line carries only the bounded contract fields
-    // (r16, verdict task 1): the r14 line grew past the driver's parse
-    // once per-query stall/cache/phase detail rode along (BENCH_r14.json
-    // `parsed: null`, which cost round 15 its whole round-over-round PERF
-    // table), and every unbounded field here is contention-DRIVEN — the
-    // noisier the host, the bigger the line, the likelier the parse loss,
-    // exactly when the disclosure matters most. The full evidence
-    // (spread, exchange meters, calib series, amortized caches, stall
-    // retries/phases, composite samples) is unchanged and lands per run
-    // in the `detail` file named on the line (BENCH_driver.json, or the
-    // committed curated BENCH_local.json).
-    // BENCH_local.json is the CURATED builder artifact (committed, quoted
-    // by the verdict); the r10 judge found the driver's contended in-round
-    // run had overwritten it in the working tree minutes after it landed.
-    // Only a builder-initiated run (GRAFT_BENCH_CURATED=1) may write it;
-    // anything else — the driver flow — writes BENCH_driver.json, keeping
-    // the full-detail artifact per run without shadowing the curated one.
     val outName =
       if (sys.env.get("GRAFT_BENCH_CURATED").contains("1")) "BENCH_local.json"
       else "BENCH_driver.json"
-    // calib rides the compact line ONLY in normal mode, where its series
-    // is bounded (~1 slice per 20 queries + retry/tail probes): round
-    // N+1's priorCalib() normalizes against the calib object it finds in
-    // the driver-captured BENCH_rN.json, i.e. in THIS line — dropping it
-    // entirely would anchor every future normalization to the last
-    // pre-r16 artifact. Composite mode's series grows per sample
-    // (hundreds of brackets) and its runs publish through the curated
-    // detail file instead, so there the line stays calib-free.
-    val compact = s"""{"metric":"total","value":${f(total)},"unit":"sec","total_min":${f(totalMin)},"queries":$qs,"passes":$Passes,"failed":$failed,"sf":"$sfDir","load_peak":${f(loadPeak)},"per_query_median":${f(perQueryMedian)},"common_subset":$commonJson""" +
-      (if (compositeMode) s""","mode":"quiet_composite""""
-       else s""","calib":$calibJson""") +
-      s""","detail":"$outName"}"""
-    val full = s"""{"metric":"total","value":${f(total)},"unit":"sec","total_min":${f(totalMin)},"queries":$qs,"spread":$spread,"exchange":$shuffle,"growth":$growthJson,"streaming":$streamingJson,"stall_phases":$stallPhasesJson,"load":$loadJson,$env$compositeDetail}"""
+    val head = s""""metric":"total","value":${f(total)},"unit":"sec","total_min":${f(totalMin)},"queries":$qs"""
+    val compact = s"""{$head,"passes":$Passes,"failed":$failed,"sf":"$sfDir","load_peak":${f(loadPeak)},"per_query_median":${f(perQueryMedian)},"common_subset":$commonJson,"calib":$calibJson,"detail":"$outName"}"""
+    val full = s"""{$head,"spread":$spread,"exchange":$shuffle,"growth":$growthJson,"streaming":$streamingJson,"load":$loadJson,"passes":$Passes,"failed":$failed,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","load_peak":${f(loadPeak)},"calib":$calibJson,"data_ratio":${f(dataRatio)},"growth_flagged":$growthFlagged,"amortized":$amortizedJson,"per_query_median":${f(perQueryMedian)},"common_subset":$commonJson}"""
     println(compact)
-    try if (only.isEmpty) java.nio.file.Files.writeString(
+    try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(repoRoot, outName), full + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outName: ${e.getMessage}")

@@ -51,18 +51,15 @@ object GraftSession {
       // then reads vectors whose backing store is nulled
       // ("this.floatData is null" NPEs, reproduced deterministically on
       // the 10-file sf1ish embeddings slice; single-file reads mask it).
-      // Arrays read row-wise until then; the env toggle re-enables for
-      // A/B. Measured cost (tools/NestedVecAb, sf1ish embeddings full
-      // array decode, 5-pass medians): row-wise 0.306 s vs vectorized
-      // 0.250 s (mins 0.264/0.216) on this host; an independent judge
-      // run measured 0.236 vs 0.219 — i.e. the workaround costs ~7-20%
-      // on the isolated array-decode microbench, and ~0 at suite level
-      // (the engine's array-bearing scans are narrow: embedding vectors,
-      // media fixtures). Pinned on Spark 4.1.2 — re-run the A/B and
-      // MultiFileArrayScanSpec on any Spark upgrade before flipping the
-      // default.
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader",
-        sys.env.getOrElse("SPARK_GRAFT_NESTED_VEC", "false"))
+      // Arrays read row-wise until then. Measured cost (sf1ish embeddings
+      // full array decode, 5-pass medians): row-wise 0.306 s vs vectorized
+      // 0.250 s (mins 0.264/0.216); an independent run measured 0.236 vs
+      // 0.219 — i.e. the workaround costs ~7-20% on the isolated
+      // array-decode microbench, and ~0 at suite level (the engine's
+      // array-bearing scans are narrow: embedding vectors, media
+      // fixtures). Pinned on Spark 4.1.2 — re-check the reader with
+      // MultiFileArrayScanSpec on any Spark upgrade before turning it on.
+      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -197,6 +197,12 @@ object Tables {
       s"$bytes:$mtime:$count:$nameHash"
     } catch { case scala.util.control.NonFatal(_) => "unknown" }
 
+  /** Input bytes of a [[sourceFingerprint]]: the Hadoop listing's byte
+    * total, which leaves out checksum (`.crc`) sidecars; -1 when the
+    * listing failed. [[loadSpread]] sizes its width from this total. */
+  private[graft] def fingerprintBytes(fp: String): Long =
+    fp.split(':').headOption.flatMap(_.toLongOption).getOrElse(-1L)
+
   /** Load with scan parallelism sized to the DATA, capped at the
     * session's core count.
     *
@@ -230,9 +236,9 @@ object Tables {
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = load(spark, dir, name)
     val fp = sourceFingerprint(spark, s"$dir/$name.parquet")
-    // fingerprint leads with total bytes; "unknown" (listing failure)
-    // degrades to the pre-r16 core-count width, never to a serial scan
-    val bytes = fp.split(':').headOption.flatMap(_.toLongOption).getOrElse(-1L)
+    // a listing failure degrades to the pre-r16 core-count width, never
+    // to a serial scan
+    val bytes = fingerprintBytes(fp)
     val cores = spark.sparkContext.defaultParallelism
     val target =
       if (bytes < 0) cores

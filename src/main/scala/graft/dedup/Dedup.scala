@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Materialize
 import graft.expressions.GraftExpressions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -284,9 +285,16 @@ object Dedup {
     * and its neighbors; convergence needs component-diameter rounds —
     * small by nature for duplicate clusters — with a driver-side
     * changed-count check per round. Each round is one equi-join + one
-    * aggregate on 8-byte ids; the result materializes eagerly and all
-    * working sets release before returning (same contract as
+    * aggregate on 8-byte ids; the result materializes eagerly and the
+    * edge set releases before returning (same contract as
     * [[graft.sim.EmbeddingDedup.nearDupPairs]]).
+    *
+    * Every round's label set is a lineage-truncating [[Materialize.pin]],
+    * not a `persist`: round k's plan reads round k-1's labels twice (the
+    * neighbor join and the self join), so a persisted-but-untruncated
+    * chain doubles its logical plan each round, and planning/explaining
+    * it exhausted a 4 GB heap by round 8. Superseded pins are reclaimed
+    * by the context cleaner.
     */
   def dedupClusters(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 20): DataFrame = {
@@ -295,10 +303,9 @@ object Dedup {
     val edges = fwd.unionByName(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      var labels = Materialize.pin(edges.select(col("src").as("node"))
+        .distinct().withColumn("label", col("node")))
       // Convergence check without a per-round join: labels only DECREASE
       // (least of self and neighbor min), so the label sum is unchanged
       // iff no node changed — one map-side-combinable aggregate per round
@@ -322,22 +329,18 @@ object Dedup {
           .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
           .groupBy("src").agg(min("label").as("nbr"))
           .withColumnRenamed("src", "node")
-        val next = labels.join(nbrMin, Seq("node"), "left")
+        val next = Materialize.pin(labels.join(nbrMin, Seq("node"), "left")
           .select(col("node"),
-            least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+            least(col("label"), coalesce(col("nbr"), col("label"))).as("label")))
         val nextSum = labelSum(next)
-        labels.unpersist(blocking = false)
         labels = next
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
         iter += 1
       }
       labels.select(col("node").as("doc_id"), col("label").as("cluster"))
-        .localCheckpoint(eager = true)
     } finally {
       edges.unpersist(blocking = false)
-      labels.unpersist(blocking = false)
       ()
     }
   }

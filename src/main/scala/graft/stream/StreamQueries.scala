@@ -54,7 +54,7 @@ object StreamQueries {
     * table — the conf is result-invisible by construction).
     *
     * Round-16 additions (verdict task 2: the per-trigger fixed cost the
-    * r15 StreamMeter attribution names — st2's wall splits into
+    * r15 stream-phase attribution names — st2's wall splits into
     * state.commit ≈ 2.3–3.1 s summed, walCommit/commitOffsets ≈ 0.35 s,
     * and a whole third trigger that carries no data):
     *

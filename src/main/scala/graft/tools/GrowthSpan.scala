@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,20 +101,6 @@ object GrowthSpan {
       "ratio should decompose as a mix of (n2/n1)x(bands2/bands1) and " +
       "(cands2/cands1) - check it against the mb column rather than trusting this text."))
 
-  private final class Meter extends SparkListener {
-    private val bytes = new java.util.concurrent.atomic.AtomicLong
-    private val records = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        ()
-      }
-    }
-    def mark(): (Long, Long) = (bytes.getAndSet(0L), records.getAndSet(0L))
-  }
-
   /** Replicate one source table `copies`× with copy-distinct keys. */
   private def scaled(spark: SparkSession, src: String, name: String): DataFrame = {
     val base = spark.read.parquet(s"$src/$name.parquet")
@@ -189,8 +174,7 @@ object GrowthSpan {
     val spark = graft.core.GraftSession.local(cpus, "graft-growth-span")
     ensureSf1ish(spark, sf01, sf1)
 
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = graft.core.RunMeter.attach(spark)
     val dirs = Seq("sf0.01" -> sf001, "sf0.1" -> sf01, "sf1ish" -> sf1)
     val rowCounts = dirs.map { case (tag, d) => tag -> rows(spark, d) }.toMap
 
@@ -209,7 +193,6 @@ object GrowthSpan {
     val results = names.filter(queries.contains).map { name =>
       val fn = queries(name)
       val runs = dirs.map { case (tag, d) =>
-        org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
         meter.mark()
         def run(): Boolean =
           try { fn(spark, d).write.format("noop").mode("overwrite").save(); true }
@@ -220,12 +203,12 @@ object GrowthSpan {
         val tc0 = System.nanoTime()
         val ok = run()
         val coldSec = if (ok) (System.nanoTime() - tc0) / 1e9 else -1.0
-        org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-        val (b, recs) = meter.mark()
+        val w = meter.mark()
         val t0 = System.nanoTime()
         val ok2 = ok && run()
         val sec = if (ok2) (System.nanoTime() - t0) / 1e9 else -1.0
-        tag -> ((if (ok) b else -1L, if (ok) recs else -1L, sec, coldSec))
+        tag -> ((if (ok) w.shuffleBytes else -1L,
+          if (ok) w.shuffleRecords else -1L, sec, coldSec))
       }.toMap
       // clear any memoized working sets between corpora
       spark.sharedState.cacheManager.clearCache()
@@ -336,7 +319,7 @@ object GrowthSpan {
         s""""queries":{${entries.map(_._2).mkString(",")}}}"""
     println(json)
     // dev-only subset runs (SPARK_GRAFT_SPAN_QUERIES) must not overwrite
-    // the committed full-sweep artifact — the Bench `only`-guard lesson
+    // the committed full-sweep artifact
     if (sys.env.get("SPARK_GRAFT_SPAN_QUERIES").isEmpty)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(repoRoot, "GROWTH_SPAN.json"), json + "\n")

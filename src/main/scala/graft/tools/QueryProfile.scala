@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: per query, how much of the wall clock is cluster work
@@ -11,40 +10,6 @@ import org.apache.spark.sql.SparkSession
   * (defaults to the current bench top-10 when no names are given).
   */
 object QueryProfile {
-
-  private final class JobMeter extends SparkListener {
-    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    // boxed Long: a primitive-valued CHM would unbox remove()'s null miss
-    // to 0L, and a job that ends without a recorded start (launched before
-    // the listener attached, or straddling a drain) would record a
-    // (0, endTime) span whose union swallows the whole epoch
-    private val starts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      starts.put(js.jobId, js.time); ()
-    }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-      val s = starts.remove(je.jobId)
-      if (s != null) { spans.add((s.longValue(), je.time)); () }
-    }
-    def drain(): Seq[(Long, Long)] = {
-      val out = Seq.newBuilder[(Long, Long)]
-      var e = spans.poll()
-      while (e != null) { out += e; e = spans.poll() }
-      out.result()
-    }
-  }
-
-  /** Total covered milliseconds of a set of [start,end] spans (union —
-    * concurrent jobs don't double-count). */
-  private def covered(spans: Seq[(Long, Long)]): Long = {
-    val sorted = spans.sortBy(_._1)
-    var total = 0L; var curLo = Long.MinValue; var curHi = Long.MinValue
-    sorted.foreach { case (lo, hi) =>
-      if (lo > curHi) { total += curHi - curLo max 0L; curLo = lo; curHi = hi }
-      else curHi = math.max(curHi, hi)
-    }
-    total + (curHi - curLo max 0L)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -57,22 +22,18 @@ object QueryProfile {
         "st3_stream_dedup", "q59_gap_fill", "q27_range_join",
         "st5_stateful_sessions", "d9_incremental_dedup", "q6_region_join")
     val spark = graft.core.GraftSession.local(cpus, "graft-profile")
-    val meter = new JobMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = graft.core.RunMeter.attach(spark)
     val qs = graft.SparkEntry.queries
     names.foreach { n =>
       val fn = qs.getOrElse(n, sys.error(s"unknown query $n"))
       fn(spark, warmDir).write.format("noop").mode("overwrite").save() // warm
-      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-      meter.drain()
+      meter.mark()
       val passes = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext)
-        val spans = meter.drain()
-        val cov = covered(spans) / 1e3
-        (wall, spans.size, cov)
+        val w = meter.mark()
+        (wall, w.jobs, w.jobMs / 1e3)
       }
       val best = passes.minBy(_._1)
       println(f"${n}%-24s wall=${best._1}%6.3f jobs=${best._2}%3d cluster=${best._3}%6.3f driver=${best._1 - best._3}%6.3f  (all walls: ${passes.map(p => f"${p._1}%.2f").mkString(" ")})")

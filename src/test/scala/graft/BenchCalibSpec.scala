@@ -220,4 +220,12 @@ class BenchCalibSpec extends AnyFunSuite {
     assert(w > 0.0 && r > 0.0 && w.isFinite && r.isFinite, s"($w, $r)")
     assert(probes() == before, "calibIo left its temp file behind")
   }
+
+  test("memSlice measures a parallel stream-sum and is reusable") {
+    // the bandwidth probe must return sane positive seconds and not
+    // degrade across calls
+    val a = Bench.memSlice(4)
+    val b = Bench.memSlice(4)
+    assert(a > 0 && b > 0 && a < 30 && b < 30)
+  }
 }

@@ -33,7 +33,7 @@ class SparkEntrySpec extends SparkSpec {
   test("every query runs and returns rows at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       assert(fn(spark, sf).limit(1).count() > 0, s"query $name returned no rows")
-      // StreamMeter mark-soundness (sweep #9): the bench marks per-query
+      // RunMeter mark-soundness (sweep #9): the bench marks per-query
       // phase sums right after a query's pass — a query that returned
       // with a streaming query still mid-trigger would leak its progress
       // events into the NEXT query's attribution window. Pin that no

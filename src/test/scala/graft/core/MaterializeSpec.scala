@@ -2,9 +2,9 @@ package graft.core
 
 import graft.SparkSpec
 
-/** The materialization-strategy pin (r16): every strategy must be
-  * result-invisible — same rows out of the pinned frame — and the conf
-  * must degrade to the localCheckpoint default when unset/unknown.
+/** The materialization pin must be result-invisible — same rows out of the
+  * pinned frame, eager or lazy — and must truncate lineage. `pin` has one
+  * strategy (`localCheckpoint`) and reads no session conf.
   */
 class MaterializeSpec extends SparkSpec {
 
@@ -16,32 +16,23 @@ class MaterializeSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
   }
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("all strategies produce identical rows, eager and lazy") {
-    val want = build().collect().map(_.toString).sorted.toSeq
+    val want = rows(build())
     assert(want.nonEmpty)
-    Seq("localCheckpoint", "replicated", "checkpoint", "no-such-strategy")
-      .foreach { strat =>
-        spark.conf.set(Materialize.ConfKey, strat)
-        try {
-          val eagerGot = Materialize.pin(build())
-            .collect().map(_.toString).sorted.toSeq
-          assert(eagerGot == want, s"strategy=$strat eager")
-          val lazyGot = Materialize.pin(build(), eager = false)
-            .collect().map(_.toString).sorted.toSeq
-          assert(lazyGot == want, s"strategy=$strat lazy")
-        } finally spark.conf.unset(Materialize.ConfKey)
-      }
+    assert(rows(Materialize.pin(build())) == want, "eager")
+    assert(rows(Materialize.pin(build(), eager = false)) == want, "lazy")
   }
 
   test("default (conf unset) pins eagerly and reads back identically") {
-    assert(spark.conf.getOption(Materialize.ConfKey).isEmpty)
     val pinned = Materialize.pin(build())
     // localCheckpoint truncates lineage: the pinned plan must not re-read
     // the source (an RDD scan, not a range+aggregate re-derivation)
     assert(pinned.queryExecution.optimizedPlan.collectLeaves()
       .forall(_.getClass.getSimpleName.contains("LogicalRDD")),
-      "default strategy should be lineage-truncating localCheckpoint")
-    assert(pinned.collect().map(_.toString).sorted.toSeq ==
-      build().collect().map(_.toString).sorted.toSeq)
+      "pin should be lineage-truncating localCheckpoint")
+    assert(rows(pinned) == rows(build()))
   }
 }

@@ -141,11 +141,12 @@ class PlanSpec extends SparkSpec {
     val narrow = Tables.loadSpread(spark, sf, "documents")
     assert(!planOf(narrow).contains("Exchange"),
       s"spread paid a per-query exchange:\n${planOf(narrow)}")
-    val bytes = {
-      val f = new java.io.File(s"$sf/documents.parquet")
-      if (f.isFile) f.length
-      else Option(f.listFiles).toSeq.flatten.filter(_.isFile).map(_.length).sum
-    }
+    // bytes counted the way loadSpread counts them (no .crc sidecars), so
+    // the width target cannot disagree with production near a boundary
+    def sourceBytes(dir: String): Long = Tables.fingerprintBytes(
+      Tables.sourceFingerprint(spark, s"$dir/documents.parquet"))
+    val bytes = sourceBytes(sf)
+    assert(bytes > 0, "source listing failed")
     val wantParts = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L,
         (bytes + Tables.SpreadBytesPerTask - 1) / Tables.SpreadBytesPerTask))
@@ -163,8 +164,7 @@ class PlanSpec extends SparkSpec {
       .selectExpr("id", "repeat(uuid(), 4) as pad")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$bigTmp/documents.parquet")
-    val bigBytes = Option(new java.io.File(s"$bigTmp/documents.parquet")
-      .listFiles).toSeq.flatten.filter(_.isFile).map(_.length).sum
+    val bigBytes = sourceBytes(bigTmp)
     assert(bigBytes >
       spark.sparkContext.defaultParallelism * Tables.SpreadBytesPerTask,
       s"fixture too small ($bigBytes B) to exercise the cap")
